@@ -105,21 +105,13 @@ object Cli {
       case "html_render" =>
         val ids = opt(rest, "ids").getOrElse(sys.error("--ids required"))
           .split(",").map(_.trim.toLong)
+        // one evaluation of the store's merge-on-read view serves every id
         val items = store.current()
-        ids.foreach { id =>
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try ids.foreach { id =>
           val tree = Render.buildTree(items, id)
           val opts =
-            if (tree.item.itemType == "poll")
-              items.filter(org.apache.spark.sql.functions.col("poll") === id)
-                .collect().map(r => Render.RItem(
-                  r.getAs[Long]("id"), r.getAs[String]("type"),
-                  Option(r.getAs[String]("author")), r.getAs[Long]("time"),
-                  Option(r.getAs[String]("text")), Option(r.getAs[String]("url")),
-                  Option(r.get(r.fieldIndex("score"))).map(_.asInstanceOf[Long]),
-                  Option(r.getAs[String]("title")),
-                  Option(r.get(r.fieldIndex("parent"))).map(_.asInstanceOf[Long])))
-                .toSeq.sortBy(i => (i.time, i.id))
-            else Nil
+            if (tree.item.itemType == "poll") Render.pollOptions(items, id) else Nil
           val html = Render.renderPage(tree, opts)
           opt(rest, "output") match {
             case Some(template) =>
@@ -128,7 +120,7 @@ object Cli {
               println(s"[html_render] wrote $path")
             case None => println(html)
           }
-        }
+        } finally items.unpersist(blocking = false)
 
       case other => sys.error(s"unknown command: $other")
     }

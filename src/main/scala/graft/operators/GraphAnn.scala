@@ -157,10 +157,28 @@ object GraphAnn {
     * + the deterministic NSW insertion loop. Runs wherever the rows
     * already are; does no Spark work. */
   private[graft] def buildGraphFromRows(rows: Seq[(Long, Seq[Double])],
-                                        m: Int, efC: Int): Graph = {
+                                        m: Int, efC: Int,
+                                        work: BuildWork = null): Graph = {
     val g = allocGraph(rows)
-    insertRange(g, 1, m, efC)
+    insertRange(g, 1, m, efC, work)
     g
+  }
+
+  /** Distance evaluations of one construction, recorded per batch of tasks
+    * that may run concurrently as (total, largest single task). The
+    * sequential build records every node insertion as a batch of its own.
+    * A greedy scheduler finishes a batch on `p` cores within total / p +
+    * largest evaluations (Brent), so [[boundAt]] bounds the whole build's
+    * distance work at any core count from counts no host can move. */
+  private[operators] final class BuildWork {
+    private var total = 0L
+    private var critical = 0L
+    private[GraphAnn] def record(tasks: Array[Long]): Unit =
+      if (tasks.nonEmpty) { total += tasks.sum; critical += tasks.max }
+    def evaluations: Long = total
+    /** The serial part: the largest task of every batch, one after another. */
+    def span: Long = critical
+    def boundAt(p: Int): Double = total.toDouble / p + critical
   }
 
   /** Array fill + validation shared by every construction path. */
@@ -191,28 +209,35 @@ object GraphAnn {
     * existing graph; new nodes' adjacency must be empty. Mutates
     * `g.nbrs` slots only (inner arrays are replaced, never mutated, so
     * a copied outer array fully isolates an old graph). */
-  private def pruneNode(g: Graph, node: Int, m: Int): Unit =
-    if (g.nbrs(node).length > m) {
+  private def pruneNode(g: Graph, node: Int, m: Int): Int = {
+    val n = g.nbrs(node).length
+    if (n <= m) 0
+    else {
       val q = new Array[Double](g.dim)
       System.arraycopy(g.vecs, node * g.dim, q, 0, g.dim)
       g.nbrs(node) = g.nbrs(node)
         .map(nb => (nb, cosAt(g, nb, q, g.norms(node))))
         .sortBy { case (nb, s) => (-s, g.ids(nb)) }
         .take(m).map(_._1)
+      n // distance evaluations
     }
+  }
 
-  private def insertRange(g: Graph, start: Int, m: Int, efC: Int): Unit = {
+  private def insertRange(g: Graph, start: Int, m: Int, efC: Int,
+                          work: BuildWork = null): Unit = {
     var i = math.max(start, 1) // node 0 is the entry: nothing to link to
     while (i < g.size) {
       val q = new Array[Double](g.dim)
       System.arraycopy(g.vecs, i * g.dim, q, 0, g.dim)
       val found = beam(g, q, g.norms(i), entry = 0, ef = efC)
+      var evals = lastVisited()
       val chosen = found.take(m).map(_._1)
       g.nbrs(i) = chosen
       chosen.foreach { nb =>
         g.nbrs(nb) = g.nbrs(nb) :+ i
-        pruneNode(g, nb, m)
+        evals += pruneNode(g, nb, m)
       }
+      if (work != null) work.record(Array(evals))
       i += 1
     }
   }
@@ -239,17 +264,20 @@ object GraphAnn {
     * all of the construction's distance work — parallelizes across
     * cores; the apply phase is O(gen·m) list surgery. */
   private def insertRangeBatched(g: Graph, start: Int, m: Int,
-                                 efC: Int): Unit = {
+                                 efC: Int, work: BuildWork = null): Unit = {
     var lo = math.max(start, 1)
     while (lo < g.size) {
       val hi = math.min(math.max(lo * 2, lo + 1), g.size)
       val chosen = new Array[Array[Int]](hi - lo)
+      val beamEvals = new Array[Long](hi - lo)
       java.util.stream.IntStream.range(lo, hi).parallel().forEach { i =>
         val q = new Array[Double](g.dim)
         System.arraycopy(g.vecs, i * g.dim, q, 0, g.dim)
         chosen(i - lo) = beam(g, q, g.norms(i), entry = 0, ef = efC)
           .take(m).map(_._1)
+        beamEvals(i - lo) = lastVisited()
       }
+      if (work != null) work.record(beamEvals)
       // apply: each new node takes its chosen list (disjoint slots),
       // and the generation's REVERSE links aggregate per target first —
       // one bulk extend + at most one SLACK prune (2m → m) per touched
@@ -273,18 +301,21 @@ object GraphAnn {
         i += 1
       }
       val targets = extra.keySet().toArray(Array.empty[Integer])
-      java.util.Arrays.stream(targets).parallel().forEach { nb =>
-        g.nbrs(nb.intValue) =
-          g.nbrs(nb.intValue) ++ extra.get(nb)
-        if (g.nbrs(nb.intValue).length > 2 * m)
-          pruneNode(g, nb.intValue, m)
+      val pruneEvals = new Array[Long](targets.length)
+      java.util.stream.IntStream.range(0, targets.length).parallel().forEach { t =>
+        val nb = targets(t).intValue
+        g.nbrs(nb) = g.nbrs(nb) ++ extra.get(targets(t))
+        if (g.nbrs(nb).length > 2 * m) pruneEvals(t) = pruneNode(g, nb, m)
       }
+      if (work != null) work.record(pruneEvals)
       lo = hi
     }
     // final prune to the serving degree bound — each node's prune only
     // touches its own list, so the pass parallelizes safely
+    val finalEvals = new Array[Long](g.size)
     java.util.stream.IntStream.range(0, g.size).parallel()
-      .forEach { i => pruneNode(g, i, m) }
+      .forEach { i => finalEvals(i) = pruneNode(g, i, m) }
+    if (work != null) work.record(finalEvals)
   }
 
   /** [[buildGraph]] with the batch-synchronous PARALLEL construction —
@@ -307,8 +338,18 @@ object GraphAnn {
     require(rows.length <= maxVectors,
       s"more than $maxVectors vectors: past the driver-graph ceiling — " +
         "shard by IVF cell ([[GraphShards]]) or raise maxVectors")
-    val g = allocGraph(rows.map(r => (r.getLong(0), r.getSeq[Double](1))))
-    insertRangeBatched(g, 1, m, efConstruction)
+    buildGraphParallelFromRows(
+      rows.map(r => (r.getLong(0), r.getSeq[Double](1))), m, efConstruction)
+  }
+
+  /** [[buildGraphParallel]]'s construction on in-memory (id, vec) rows,
+    * ascending-id sorted by the caller; `work`, when set, receives the
+    * schedule's distance evaluations. */
+  private[operators] def buildGraphParallelFromRows(
+      rows: Seq[(Long, Seq[Double])], m: Int, efC: Int,
+      work: BuildWork = null): Graph = {
+    val g = allocGraph(rows)
+    insertRangeBatched(g, 1, m, efC, work)
     g
   }
 

@@ -7,33 +7,42 @@ import org.apache.spark.storage.StorageLevel
 /** Recursive tree expansion (SURVEY.md J3): the set-based replacement for the
   * reference's `build_item_tree` (`/root/reference/hnarchive.py:306-319`),
   * which issues one SQL point-query per tree node (N+1 pattern). Spark has no
-  * recursive CTE, so this is the classic semi-naive BFS: one self-join per
-  * tree *level* (not per node), accumulating (id, root, depth, path).
+  * recursive CTE, so [[TreeExpand.expand]] is the classic semi-naive BFS,
+  * accumulating (id, root, depth, path) one tree *level* (not node) at a
+  * time.
   *
-  * Scale design:
-  *  - two regimes, chosen by MEASURING the edge table (one count, which
-  *    doubles as cache population). Small graphs (edge table within the
-  *    broadcast budget): every level joins against ONE broadcast of the
-  *    edge table itself — the build side is the exactly-measured relation,
-  *    every in-plan level reuses the same exchange (one build job per
-  *    round, not per level — the q11 job floor), unmeasured level outputs
-  *    only stream, and AQE (pure per-stage latency at this size) is
-  *    suspended for the expansion. Large graphs: the edge side is
-  *    repartitioned by parent key once and cached, deep levels shuffle-hash
-  *    against it, and AQE stays per session config — the 100-TB path.
-  *  - each round is `localCheckpoint`ed to cut lineage growth (otherwise the
-  *    plan doubles per level and the driver OOMs planning level ~30).
-  *  - termination is the fixpoint (empty frontier) with a maxDepth fuse
-  *    against cyclic/corrupt edge sets.
+  * Scale design: one map-only count of the edge table (which doubles as
+  * cache population) picks one of three tiers. The small-graph gate is that
+  * the edge table fits the broadcast budget in rows and estimated bytes.
+  *  - driver: a small graph with integral or string ids is collected once
+  *    and the BFS runs on the driver — zero rounds, no checkpoint, no AQE
+  *    window. The small regime below ships this same table through the
+  *    driver into a broadcast every round, so collecting it once moves
+  *    strictly less data. The tier declines to the rounds when a level
+  *    outgrows the driver frontier cap or the emitted rows outgrow the byte
+  *    budget, so the same input resolves identically either way.
+  *  - broadcast rounds: every level joins against ONE broadcast of the edge
+  *    table itself — the build side is the exactly-measured relation, every
+  *    in-plan level reuses the same exchange (one build job per round, not
+  *    per level), unmeasured level outputs only stream, and AQE (pure
+  *    per-stage latency at this size) is suspended for the expansion.
+  *  - shuffle rounds: for large graphs the edge side is repartitioned by
+  *    parent key once and cached, deep levels shuffle-hash against it, and
+  *    AQE stays per session config — the 100-TB path. A small graph whose
+  *    frontier outgrows a budget mid-flight is demoted here.
+  * Each round is `localCheckpoint`ed to cut lineage growth (otherwise the
+  * plan doubles per level and the driver OOMs planning level ~30). Every
+  * tier terminates at the fixpoint (empty frontier) with a maxDepth fuse
+  * against cyclic/corrupt edge sets.
   *
-  * Concurrency note (both entry points): a SMALL-graph expansion suspends
-  * `spark.sql.adaptive.enabled` on its session for the duration (tiny
-  * broadcast-only stages gain nothing from adaptive replanning, and the
-  * per-stage replan latency dominates at that size). Concurrent expansions
-  * on the same session serialize their windows under a per-session lock
-  * (no save/restore clobber), but an unrelated query issued on the SAME
-  * session during the window also runs with AQE off — run
-  * concurrency-sensitive work on its own `spark.newSession()`.
+  * Concurrency note (both entry points): a small-graph expansion that runs
+  * rounds suspends `spark.sql.adaptive.enabled` on its session for the
+  * duration (tiny broadcast-only stages gain nothing from adaptive
+  * replanning, and the per-stage replan latency dominates at that size).
+  * Concurrent expansions on the same session serialize their windows under
+  * a per-session lock (no save/restore clobber), but an unrelated query
+  * issued on the SAME session during the window also runs with AQE off —
+  * run concurrency-sensitive work on its own `spark.newSession()`.
   */
 object TreeExpand {
 
@@ -52,6 +61,9 @@ object TreeExpand {
     *    nothing materializes on the driver. The wide-graph graceful degrade.
     */
   private val DriverMode = "driver"
+  /** `modeLog` entry of an expansion resolved by the driver tier, which runs
+    * no rounds (see [[expand]]). */
+  private val DriverGraphMode = "driver-graph"
   private val BroadcastMode = "broadcast"
   private val ShuffleMode = "shuffle"
 
@@ -66,7 +78,9 @@ object TreeExpand {
     *              the batch size; exchange reuse of the single edge-table
     *              broadcast keeps the chained in-plan joins to one build.
     * @param driverFrontierRows max frontier rows kept on the driver between
-    *              rounds (the `driver` residency above)
+    *              rounds (the `driver` residency above); the driver tier
+    *              holds every level on the driver, so it declines to the
+    *              rounds when any level exceeds this
     * @param broadcastFrontierRows max frontier rows joined via broadcast;
     *              beyond this the round degrades to a shuffle-hash join
     *              instead of OOMing the driver with the broadcast build
@@ -74,9 +88,11 @@ object TreeExpand {
     *              dominate) for any broadcast/driver residency — rows are
     *              not a memory unit, and paths grow with depth, so the
     *              regime demotes mid-flight when a measured frontier
-    *              exceeds this
-    * @param modeLog when set, appends the residency chosen each round —
-    *              test observability for the size gate
+    *              exceeds this. The driver tier declines to the rounds when
+    *              all its emitted rows together exceed it
+    * @param modeLog when set, appends the residency chosen each round, or
+    *              `driver-graph` once when the driver tier resolved the
+    *              expansion — test observability for the size gates
     * @return (id, root, depth: int, path: string "root/…/id")
     */
   def expand(
@@ -179,11 +195,6 @@ object TreeExpand {
     def suspendAqe(): Unit = { if (smallGraph) aqe.suspend(); headWin.suspend() }
     def restoreAqe(): Unit = { aqe.restore(); headWin.restore() }
 
-    /** Estimated broadcast payload of one frontier row: the path string
-      * dominates; ids/depth are a constant tax. */
-    def rowBytes(r: org.apache.spark.sql.Row): Long =
-      32L + (if (r.isNullAt(3)) 0 else r.getString(3).length)
-
     def adopt(nextFrontier: DataFrame): Unit = tdbg("adopt") {
       val sample = nextFrontier.head(driverFrontierRows + 1)
       val sampleBytes = sample.iterator.map(rowBytes).sum
@@ -224,52 +235,64 @@ object TreeExpand {
       if (modeLog != null) modeLog += mode
     }
 
-    suspendAqe()
     val acc =
       try {
-        adopt(roots
-          .select(col(idCol).as("_id"))
-          .distinct()
-          .select(col("_id"), col("_id").as("_root"), lit(0).as("_depth"),
-            col("_id").cast("string").as("_path"))
-          .localCheckpoint())
+        // driver tier: a measured-small edge table whose types print on the
+        // driver as Spark casts them is collected once and the BFS resolves
+        // locally — zero rounds, no checkpoint, no AQE window
+        val idType = edges.schema(idCol).dataType
+        val resolved =
+          if (smallGraph && driverIdType(idType) &&
+              edges.schema(parentCol).dataType == idType &&
+              roots.schema(idCol).dataType == idType) {
+            headWin.suspend()
+            tdbg("driver graph")(expandOnDriver(childOf, roots, idCol,
+              frontierSchema, maxDepth, driverFrontierRows, broadcastMaxBytes))
+          } else None
+        if (resolved.isDefined && modeLog != null) modeLog += DriverGraphMode
+        resolved.getOrElse {
+          suspendAqe()
+          adopt(roots
+            .select(col(idCol).as("_id"))
+            .distinct()
+            .select(col("_id"), col("_id").as("_root"), lit(0).as("_depth"),
+              col("_id").cast("string").as("_path"))
+            .localCheckpoint())
 
-        var out = frontier
-        var depth = 0
-        while (depth < maxDepth && !frontierKnownEmpty) {
-          // no in-round cap is needed: small-graph levels build their
-          // broadcast from the MEASURED edge table (see step()), so the
-          // unmeasured in-plan level outputs only stream — batching depth
-          // is limited by maxDepth alone
-          val rounds = math.min(levelsPerRound, maxDepth - depth)
-          val deeperMode = if (smallGraph) BroadcastMode else ShuffleMode
-          var levels = List(step(frontier, mode))
-          (2 to rounds).foreach { _ =>
-            levels = step(levels.head, deeperMode) :: levels }
-          // one job materializes every level of the batch; coalesce only the
-          // small (driver-frontier) rounds — 32 near-empty partitions per
-          // probe is pure overhead there; wide rounds keep their parallelism
-          val union = levels.reverse.reduce(_ unionAll _)
-          val batch = tdbg(s"materialize depth<=${depth + rounds} ($mode)") {
-            (if (mode == DriverMode) union.coalesce(8) else union)
-              .localCheckpoint()
+          var out = frontier
+          var depth = 0
+          while (depth < maxDepth && !frontierKnownEmpty) {
+            // no in-round cap is needed: small-graph levels build their
+            // broadcast from the MEASURED edge table (see step()), so the
+            // unmeasured in-plan level outputs only stream — batching depth
+            // is limited by maxDepth alone
+            val rounds = math.min(levelsPerRound, maxDepth - depth)
+            val deeperMode = if (smallGraph) BroadcastMode else ShuffleMode
+            var levels = List(step(frontier, mode))
+            (2 to rounds).foreach { _ =>
+              levels = step(levels.head, deeperMode) :: levels }
+            // one job materializes every level of the batch; coalesce only the
+            // small (driver-frontier) rounds — 32 near-empty partitions per
+            // probe is pure overhead there; wide rounds keep their parallelism
+            val union = levels.reverse.reduce(_ unionAll _)
+            val batch = tdbg(s"materialize depth<=${depth + rounds} ($mode)") {
+              (if (mode == DriverMode) union.coalesce(8) else union)
+                .localCheckpoint()
+            }
+            depth += rounds
+            adopt(batch.filter(col("_depth") === depth))
+            out = out.unionAll(batch)
           }
-          depth += rounds
-          adopt(batch.filter(col("_depth") === depth))
-          out = out.unionAll(batch)
+          if (!frontierKnownEmpty && frontier.head(1).nonEmpty) {
+            // nodes at exactly depth == maxDepth may simply be leaves: a tree
+            // of height maxDepth converged legitimately. Only fail if the
+            // frontier actually has children (rows at depth maxDepth + 1) —
+            // same contract as expandByDoubling (rejects _dist > maxDepth)
+            val deeper = step(frontier, mode).head(1).nonEmpty
+            if (deeper) throw notConverged(maxDepth)
+          }
+          out
         }
-        if (!frontierKnownEmpty && frontier.head(1).nonEmpty) {
-          // nodes at exactly depth == maxDepth may simply be leaves: a tree
-          // of height maxDepth converged legitimately. Only fail if the
-          // frontier actually has children (rows at depth maxDepth + 1) —
-          // same contract as expandByDoubling (rejects _dist > maxDepth)
-          val deeper = step(frontier, mode).head(1).nonEmpty
-          if (deeper)
-            throw new IllegalStateException(
-              s"TreeExpand did not converge within maxDepth=$maxDepth — " +
-                "cyclic or corrupt edge set? (matches Components.of fail-loud policy)")
-        }
-        out
       } finally {
         restoreAqe()
         // acc references only checkpointed batches / local relations, so the
@@ -279,6 +302,74 @@ object TreeExpand {
       }
     acc.select(col("_id").as(idCol), col("_root").as("root"),
       col("_depth").as("depth"), col("_path").as("path"))
+  }
+
+  /** Estimated broadcast payload of one (id, root, depth, path) row: the
+    * path string dominates; ids/depth are a constant tax. */
+  private def rowBytes(r: org.apache.spark.sql.Row): Long =
+    32L + (if (r.isNullAt(3)) 0 else r.getString(3).length)
+
+  private def notConverged(maxDepth: Int) = new IllegalStateException(
+    s"TreeExpand did not converge within maxDepth=$maxDepth — " +
+      "cyclic or corrupt edge set? (matches Components.of fail-loud policy)")
+
+  /** [[expand]]'s driver tier: the caller measured the edge table within the
+    * small-graph budget, so it is collected once and the BFS runs locally.
+    * Same output contract as the rounds: one row per (node, covering root),
+    * duplicate edges keep their multiplicity, every requested root gets a
+    * depth-0 row whether or not the edges mention it, and paths join the
+    * ids as Spark's string cast prints them (the caller admits only
+    * [[driverIdType]] ids). Same fail-loud policy: a level still live at
+    * maxDepth throws the rounds' error, while a tree of height exactly
+    * maxDepth converges. Returns None, and the caller runs the rounds, when
+    * a level holds more than `maxLevelRows` rows (the rounds would not keep
+    * that frontier on the driver either) or when the emitted rows' estimated
+    * bytes ([[rowBytes]]) exceed `maxBytes`. */
+  private def expandOnDriver(
+      childOf: DataFrame,
+      roots: DataFrame,
+      idCol: String,
+      schema: org.apache.spark.sql.types.StructType,
+      maxDepth: Int,
+      maxLevelRows: Int,
+      maxBytes: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    val rootRows = roots.select(col(idCol)).head(maxLevelRows + 1)
+    if (rootRows.length > maxLevelRows) return None
+    val children = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
+    childOf.collect().foreach { r =>
+      children.computeIfAbsent(r.get(1), _ => new java.util.ArrayList[Any]())
+        .add(r.get(0))
+    }
+    val out = new java.util.ArrayList[Row]()
+    var bytes = 0L
+    def admit(r: Row): Unit = { out.add(r); bytes += rowBytes(r) }
+    var level = rootRows.iterator.map(_.get(0)).distinct
+      .map(id => Row(id, id, 0, if (id == null) null else String.valueOf(id)))
+      .toIndexedSeq
+    level.foreach(admit)
+    var depth = 0
+    while (bytes <= maxBytes && depth < maxDepth && level.nonEmpty) {
+      depth += 1
+      val next = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val it = level.iterator
+      while (it.hasNext && next.length <= maxLevelRows && bytes <= maxBytes) {
+        val r = it.next()
+        val p = r.getString(3)
+        val cs = children.get(r.get(0))
+        if (cs != null) cs.forEach { c =>
+          val row = Row(c, r.get(1), depth,
+            if (p == null || c == null) null else p + "/" + String.valueOf(c))
+          next += row
+          admit(row)
+        }
+      }
+      if (next.length > maxLevelRows) return None
+      level = next.toIndexedSeq
+    }
+    if (bytes > maxBytes) return None
+    if (level.exists(r => children.containsKey(r.get(0)))) throw notConverged(maxDepth)
+    Some(childOf.sparkSession.createDataFrame(out, schema))
   }
 
   /** Pointer-doubling expansion: [[expand]]'s output contract in

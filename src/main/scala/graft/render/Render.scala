@@ -6,6 +6,8 @@ import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.TreeExpand
 
@@ -25,25 +27,45 @@ object Render {
 
   final case class Node(item: RItem, children: Seq[Node])
 
+  /** The item columns [[rItem]] decodes, in its positional order. */
+  private val itemCols =
+    Seq("id", "type", "author", "time", "text", "url", "score", "title", "parent")
+      .map(col)
+
+  private def rItem(r: Row): RItem = RItem(
+    r.getLong(0), r.getString(1),
+    Option(r.get(2)).map(_.toString), r.getLong(3),
+    Option(r.get(4)).map(_.toString), Option(r.get(5)).map(_.toString),
+    Option(r.get(6)).map(_.asInstanceOf[Long]),
+    Option(r.get(7)).map(_.toString),
+    Option(r.get(8)).map(_.asInstanceOf[Long]))
+
   /** R1 `build_item_tree` (hnarchive.py:306-319): distributed subtree
     * expansion + driver-side assembly, children sorted by (time, id) —
     * the reference's `list_children(sort=time)` (O2) with an id tie-break
-    * for determinism. */
+    * for determinism.
+    *
+    * `items` is read twice (the edge table and the final node join), so an
+    * uncached view is persisted for the call and released after it: the
+    * second read hits the blocks the first one wrote instead of evaluating
+    * the store's merge-on-read view again. A caller's own cache is left
+    * alone. The root goes in as a one-row local relation, not as a filter
+    * over `items`; an absent root still fails at assembly. */
   def buildTree(items: DataFrame, rootId: Long): Node = {
-    val edges = items.select(col("id"), col("parent"))
-    val roots = items.filter(col("id") === rootId).select(col("id"))
-    val nodes = TreeExpand.expand(edges, roots)
-      .select(col("id"), col("depth"))
-      .join(items, Seq("id"))
-      .select("id", "type", "author", "time", "text", "url", "score", "title", "parent")
-      .collect()
-    val byId = nodes.map(r => r.getLong(0) -> RItem(
-      r.getLong(0), r.getString(1),
-      Option(r.get(2)).map(_.toString), r.getLong(3),
-      Option(r.get(4)).map(_.toString), Option(r.get(5)).map(_.toString),
-      Option(r.get(6)).map(_.asInstanceOf[Long]),
-      Option(r.get(7)).map(_.toString),
-      Option(r.get(8)).map(_.asInstanceOf[Long]))).toMap
+    val pin = items.storageLevel == StorageLevel.NONE
+    if (pin) items.persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes =
+      try {
+        val roots = items.sparkSession.createDataFrame(
+          java.util.List.of(Row(rootId)),
+          StructType(Seq(StructField("id", LongType))))
+        TreeExpand.expand(items.select(col("id"), col("parent")), roots)
+          .select(col("id"))
+          .join(items, Seq("id"))
+          .select(itemCols: _*)
+          .collect()
+      } finally if (pin) items.unpersist(blocking = false)
+    val byId = nodes.map(r => r.getLong(0) -> rItem(r)).toMap
     val childMap = byId.values.toSeq
       .filter(i => i.id != rootId && i.parent.exists(byId.contains))
       .groupBy(_.parent.get)
@@ -51,6 +73,12 @@ object Render {
       childMap.getOrElse(id, Nil).sortBy(i => (i.time, i.id)).map(i => assemble(i.id)))
     assemble(rootId)
   }
+
+  /** The J4 poll → pollopt lookup [[renderPage]] takes for a poll page:
+    * the items whose `poll` is `pollId`, ordered by (time, id). */
+  def pollOptions(items: DataFrame, pollId: Long): Seq[RItem] =
+    items.filter(col("poll") === pollId).select(itemCols: _*)
+      .collect().map(rItem).toSeq.sortBy(i => (i.time, i.id))
 
   // ---- string-building (driver-side presentation, R2-R5) ----
 
@@ -114,8 +142,7 @@ object Render {
       s"<p>${i.score.getOrElse(0L)} points</p></div>"
 
   /** `html_render_poll` (hnarchive.py:370-375): story shell + options
-    * (J4 poll → pollopt lookup join happens in [[renderPage]]'s caller via
-    * the items DF). */
+    * (the J4 poll → pollopt lookup is [[pollOptions]]). */
   def renderPoll(i: RItem, options: Seq[RItem]): String = {
     val story = renderStory(i)
     story.stripSuffix("</div>") + options.map(renderPollopt).mkString + "</div>"

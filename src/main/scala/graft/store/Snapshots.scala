@@ -3,6 +3,7 @@ package graft.store
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 
 /** The parquet snapshot-store mechanic shared by [[ItemStore]] and
@@ -92,12 +93,12 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
            |LOCATION '$expected'""".stripMargin)
     else {
       // never trust a pre-existing entry blindly: verify location AND the
-      // bucket spec AND the schema before reuse (DESCRIBE FORMATTED is
-      // driver-only). A stale entry at the SAME location but a different
-      // bucket spec (store externally deleted and recreated, old session
-      // entry surviving) would otherwise make Spark trust bucket metadata
-      // over files hashed into a different bucket count — silently wrong
-      // joins, the exact failure this verification exists to catch.
+      // bucket spec AND the schema before reuse, from one catalog metadata
+      // read (driver-only, no Spark job). A stale entry at the SAME location
+      // but a different bucket spec (store externally deleted and recreated,
+      // old session entry surviving) would otherwise make Spark trust bucket
+      // metadata over files hashed into a different bucket count — silently
+      // wrong joins, the exact failure this verification exists to catch.
       def fail(what: String, got: String, want: String): Nothing =
         throw new IllegalStateException(
           s"catalog table $tbl $what is '$got', expected '$want' — " +
@@ -105,23 +106,19 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
             "session, or a stale entry survived an external change. DROP " +
             "TABLE it (the table is EXTERNAL; files are untouched) and " +
             "reopen the store.")
-      val desc = spark.sql(s"DESCRIBE FORMATTED $tbl")
-        .select("col_name", "data_type").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val loc = desc.getOrElse("Location", "")
-      // hadoop Path tolerates unencoded chars (a raw space in the store
-      // root breaks java.net.URI and would fail a LEGITIMATE reuse)
-      val locPath = try java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(loc).toUri.getPath)
-        .toAbsolutePath.normalize.toString
-      catch { case _: Exception => loc }
+      val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(tbl))
+      // the catalog keeps an encoded URI; its decoded path is what a store
+      // root with a raw space must compare against
+      val locPath = meta.storage.locationUri.fold("")(u =>
+        try Paths.get(u.getPath).toAbsolutePath.normalize.toString
+        catch { case _: Exception => u.toString })
       if (locPath != expected) fail("location", locPath, expected)
-      val gotBuckets = desc.getOrElse("Num Buckets", "").trim
+      val gotBuckets = meta.bucketSpec.map(_.numBuckets.toString).getOrElse("")
       if (gotBuckets != n.toString) fail("bucket count", gotBuckets, n.toString)
-      val gotCols = desc.getOrElse("Bucket Columns", "").replace("`", "").trim
+      val gotCols = meta.bucketSpec.map(_.bucketColumnNames.mkString("[", ", ", "]"))
+        .getOrElse("")
       if (gotCols != s"[$key]") fail("bucket columns", gotCols, s"[$key]")
-      val gotSchema = spark.table(tbl).schema
-        .map(f => (f.name, f.dataType)).toSeq
+      val gotSchema = meta.schema.map(f => (f.name, f.dataType)).toSeq
       val wantSchema = schema.map(f => (f.name, f.dataType)).toSeq
       if (gotSchema != wantSchema)
         fail("schema", gotSchema.mkString(","), wantSchema.mkString(","))

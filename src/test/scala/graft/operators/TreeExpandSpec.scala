@@ -324,6 +324,30 @@ class TreeExpandSpec extends AnyFunSuite {
     assert(!modes.exists(_.startsWith("cap")), modes)
   }
 
+  test("batched DAG rounds past the driver tier's path-byte budget") {
+    // the duplicate-edge DAG above resolves on the driver; a path-byte
+    // budget between its edge bytes (6 x 48 = 288) and its output bytes
+    // (423) keeps the small-graph gate open while the driver tier
+    // declines, so the batched broadcast rounds still run — and must match
+    // the one-level-per-round reference under the same budget
+    val dag = Seq(
+      (2L, Option(1L)), (2L, Option(1L)),
+      (3L, Option(2L)), (4L, Option(3L)), (5L, Option(4L)), (6L, Option(5L))
+    ).toDF("id", "parent")
+    def run(levels: Int, modes: scala.collection.mutable.Buffer[String]) =
+      TreeExpand.expand(dag, Seq(1L).toDF("id"), levelsPerRound = levels,
+        driverFrontierRows = 12, broadcastFrontierRows = 12,
+        broadcastMaxBytes = 400L, modeLog = modes)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getString(3)))
+        .sortBy(x => (x._1, x._4)).toSeq
+    val modes = scala.collection.mutable.Buffer.empty[String]
+    val out = run(4, modes)
+    assert(out == run(1, scala.collection.mutable.Buffer.empty[String]))
+    assert(out.count(x => x._1 == 6L) == 2)
+    assert(!modes.contains("driver-graph") && modes.contains("driver"), modes)
+    assert(!modes.exists(_.startsWith("cap")), modes)
+  }
+
   test("concurrent small-graph expansions restore AQE exactly once") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -349,5 +373,116 @@ class TreeExpandSpec extends AnyFunSuite {
     val dblDist = asMap(TreeExpand.expandByDoubling(edges, Seq(1L, 42L).toDF("id"),
       driverStateRows = 0))
     assert(dblDist == bfs)
+  }
+
+  test("concurrent small-graph rounds restore AQE exactly once") {
+    // the forest resolves on the driver, which opens no AQE window; a
+    // path-byte budget between its edge bytes (5 x 48 = 240) and its
+    // output bytes (245) sends it through the windowed broadcast rounds
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    assert(spark.conf.get("spark.sql.adaptive.enabled", "true") == "true")
+    def run() = {
+      val modes = scala.collection.mutable.Buffer.empty[String]
+      val out = asMap(TreeExpand.expand(edges, Seq(1L, 2L).toDF("id"),
+        broadcastMaxBytes = 244L, modeLog = modes))
+      assert(!modes.contains("driver-graph"), modes)
+      out
+    }
+    val expected = asMap(TreeExpand.expand(edges, Seq(1L, 2L).toDF("id")))
+    val results = Await.result(Future.sequence((1 to 4).map(_ => Future(run()))),
+      120.seconds)
+    assert(results.forall(_ == expected))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
+
+  /** (tier output, rounds output) as sorted rows — the rounds forced by a
+    * one-row broadcast cap, which fails the small-graph gate. */
+  private def tierAndRounds(edgeDf: org.apache.spark.sql.DataFrame,
+                            rootDf: org.apache.spark.sql.DataFrame,
+                            maxDepth: Int = 1000) = {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (String.valueOf(r.get(0)), String.valueOf(r.get(1)),
+        r.getInt(2), r.getString(3)))
+      .sorted
+    val tierModes = scala.collection.mutable.Buffer.empty[String]
+    val tier = rows(TreeExpand.expand(edgeDf, rootDf, maxDepth = maxDepth,
+      modeLog = tierModes))
+    assert(tierModes == Seq("driver-graph"), tierModes)
+    val roundModes = scala.collection.mutable.Buffer.empty[String]
+    val rounds = rows(TreeExpand.expand(edgeDf, rootDf, maxDepth = maxDepth,
+      driverFrontierRows = 1, broadcastFrontierRows = 1, modeLog = roundModes))
+    assert(roundModes.nonEmpty && !roundModes.contains("driver-graph"), roundModes)
+    (tier, rounds)
+  }
+
+  test("driver tier matches the rounds: nested and overlapping roots, " +
+    "duplicate edges, absent roots, string ids") {
+    // nested roots: 1 covers 3, which covers 5 — one row per covering root
+    val (nested, nestedRounds) = tierAndRounds(edges, Seq(1L, 3L, 5L, 3L).toDF("id"))
+    assert(nested == nestedRounds)
+    assert(nested.count(_._1 == "5") == 3)
+    // overlapping roots over a DAG: 8 hangs under both 1 and 2, and the
+    // duplicate (9, 8) edge doubles every row below it
+    val dag = (Seq((1L, Option.empty[Long]), (2L, Option.empty[Long]),
+      (8L, Option(1L)), (8L, Option(2L)), (9L, Option(8L)), (9L, Option(8L)),
+      (10L, Option(9L)))).toDF("id", "parent")
+    val (overlap, overlapRounds) = tierAndRounds(dag, Seq(1L, 2L).toDF("id"))
+    assert(overlap == overlapRounds)
+    assert(overlap.count(_._1 == "10") == 4)
+    // roots absent from the edges still get their depth-0 row
+    val (absent, absentRounds) = tierAndRounds(edges, Seq(1L, 42L).toDF("id"))
+    assert(absent == absentRounds)
+    assert(absent.contains(("42", "42", 0, "42")))
+    // string ids: paths join the ids as Spark's string cast prints them
+    val strEdges = Seq(("a", Option.empty[String]), ("b", Option("a")),
+      ("c", Option("b")), ("d", Option("a"))).toDF("id", "parent")
+    val (str, strRounds) = tierAndRounds(strEdges, Seq("a", "zz").toDF("id"))
+    assert(str == strRounds)
+    assert(str.contains(("c", "a", 2, "a/b/c")))
+  }
+
+  test("driver tier fails loud like the rounds at maxDepth") {
+    val cyc = Seq((1L, Option(2L)), (2L, Option(1L))).toDF("id", "parent")
+    val messages = Seq(8192, 1).map { cap =>
+      val modes = scala.collection.mutable.Buffer.empty[String]
+      val e = intercept[IllegalStateException] {
+        TreeExpand.expand(cyc, Seq(1L).toDF("id"), maxDepth = 5,
+          driverFrontierRows = cap, broadcastFrontierRows = cap, modeLog = modes)
+      }
+      // the tier throws before any round runs; the rounds log theirs
+      assert(modes.isEmpty == (cap > 1), modes)
+      e.getMessage
+    }
+    assert(messages.distinct.size == 1 && messages.head.contains(
+      "did not converge within maxDepth=5"), messages)
+    // height exactly maxDepth converges; one level deeper throws
+    def chain(n: Long) = (1L to n).map(i =>
+      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
+    val (tier, rounds) = tierAndRounds(chain(6L), Seq(1L).toDF("id"), maxDepth = 5)
+    assert(tier == rounds && tier.map(_._3).max == 5)
+    val deeper = Seq(8192, 1).map { cap =>
+      intercept[IllegalStateException] {
+        TreeExpand.expand(chain(7L), Seq(1L).toDF("id"), maxDepth = 5,
+          driverFrontierRows = cap, broadcastFrontierRows = cap)
+      }.getMessage
+    }
+    assert(deeper.distinct == Seq(messages.head), deeper)
+  }
+
+  test("driver tier declines to the rounds past the path-byte budget") {
+    // the forest under {1, 2}: 5 edges (240 bytes) pass the small-graph
+    // gate at a 244-byte budget, the 7 emitted rows (245 bytes) do not
+    val modes = scala.collection.mutable.Buffer.empty[String]
+    val out = asMap(TreeExpand.expand(edges, Seq(1L, 2L).toDF("id"),
+      broadcastMaxBytes = 244L, modeLog = modes))
+    assert(!modes.contains("driver-graph") && modes.head == "driver", modes)
+    assert(out == asMap(TreeExpand.expand(edges, Seq(1L, 2L).toDF("id"))))
+    // at the exact output size the tier resolves
+    val fits = scala.collection.mutable.Buffer.empty[String]
+    TreeExpand.expand(edges, Seq(1L, 2L).toDF("id"), broadcastMaxBytes = 245L,
+      modeLog = fits).collect()
+    assert(fits == Seq("driver-graph"), fits)
   }
 }

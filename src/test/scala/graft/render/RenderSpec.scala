@@ -1,5 +1,6 @@
 package graft.render
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -25,6 +26,63 @@ class RenderSpec extends AnyFunSuite {
     assert(tree.item.id == 1L)
     assert(tree.children.map(_.item.id) == Seq(3L, 2L)) // 3 earlier than 2
     assert(tree.children.head.children.map(_.item.id) == Seq(4L))
+  }
+
+  private def countJobs(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("buildTree runs a pinned number of Spark jobs") {
+    // a counted pin, not a wall clock: the driver tier resolves the thread
+    // with no BFS rounds, so a render is the edge count, the edge collect
+    // and the node join, with the stage jobs AQE splits them into
+    Render.buildTree(items, 1L) // plans and codegen warm
+    val jobs = countJobs(Render.buildTree(items, 1L))
+    assert(jobs == 6, s"buildTree ran $jobs jobs")
+  }
+
+  test("buildTree leaves the cache as it found it") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Render.buildTree(items, 1L)
+    assert(sc.getPersistentRDDs.size == before)
+    // an absent root fails at assembly, as before, and still releases
+    intercept[NoSuchElementException](Render.buildTree(items, 99L))
+    assert(sc.getPersistentRDDs.size == before)
+    // a view the caller cached stays cached
+    val view = items.filter(col("id") > 0L)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    try {
+      view.count()
+      assert(Render.buildTree(view, 1L).children.map(_.item.id) == Seq(3L, 2L))
+      assert(view.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      assert(sc.getPersistentRDDs.size == before + 1)
+    } finally view.unpersist(blocking = true)
+  }
+
+  test("pollOptions: the poll's options ordered by (time, id)") {
+    val withPolls = Seq(
+      (9L, "poll", Option("p"), 100L, Option.empty[String], Option(5L),
+        Option("Which?"), Option.empty[Long], Option.empty[Long]),
+      (12L, "pollopt", None, 50L, Option("opt C"), Option(2L), None, Option(9L), Option(9L)),
+      (11L, "pollopt", None, 40L, Option("opt B"), Option(1L), None, Option(9L), Option(9L)),
+      (10L, "pollopt", None, 40L, Option("opt A"), Option(3L), None, Option(9L), Option(9L)),
+      (13L, "pollopt", None, 10L, Option("other"), Option(0L), None, Option(8L), Option(8L))
+    ).toDF("id", "type", "author", "time", "text", "score", "title", "parent", "poll")
+      .withColumn("url", lit(null).cast("string"))
+    val opts = Render.pollOptions(withPolls, 9L)
+    assert(opts.map(_.id) == Seq(10L, 11L, 12L))
+    assert(opts.head == Render.RItem(10L, "pollopt", None, 40L, Some("opt A"),
+      None, Some(3L), None, Some(9L)))
   }
 
   test("story page: escaped title, url link, userinfo, nested sorted comments") {
